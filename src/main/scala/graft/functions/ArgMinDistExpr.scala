@@ -8,13 +8,14 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
 
-/** Nearest-centroid id for IVF assignment: squared-euclidean to every
-  * centroid (double-widened sequential fold — the same numerics as the
-  * codegen distance kernels), strict-`<` replacement so ties keep the
-  * LOWER centroid id. Centroids ride as a codegen reference object, so
-  * the generated code is one tight loop regardless of `nlist` — the
-  * per-centroid struct-array formulation this replaces grew the
-  * expression tree (and codegen size) linearly with the centroid count.
+/** Nearest-centroid id for IVF assignment and PQ block codes:
+  * squared-euclidean to every centroid (double-widened sequential fold —
+  * the same numerics as the codegen distance kernels), strict-`<`
+  * replacement so ties keep the LOWER centroid id. Centroids ride as a
+  * codegen reference object, so the generated code is one tight loop
+  * regardless of `nlist` — the per-centroid struct-array formulation
+  * this replaces grew the expression tree (and codegen size) linearly
+  * with the centroid count.
   */
 case class ArgMinDistExpr(child: Expression, centers: Array[Array[Float]])
     extends UnaryExpression {

@@ -1,15 +1,14 @@
 package graft.index
 
 import org.apache.spark.HashPartitioner
-import org.apache.spark.ml.clustering.KMeansModel
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 
 /** Index-artifact persistence (SURVEY §2.1 "Index persistence": the
   * reference serializes search indexes into its V1 snapshot,
-  * Neighborly/Search/SearchService.cs:285-342). Spark-native form: MLlib
-  * model dirs + a small parquet of parameters; LSH projections regenerate
+  * Neighborly/Search/SearchService.cs:285-342). Spark-native form: small
+  * parquets of centers, codebooks and parameters; LSH projections regenerate
   * from (dim, tables, funcs, seed) and exact search needs no artifact,
   * mirroring the reference's choice to persist only what cannot be
   * re-derived cheaply.
@@ -148,19 +147,29 @@ object IndexStore {
   def loadIvfPq(spark: SparkSession, path: String): (IvfModel, PqModel, org.apache.spark.sql.DataFrame) =
     (loadIvf(spark, path), loadPq(spark, path), loadIvfCoded(spark, path))
 
+  /** PQ codebooks as one tiny parquet (block, cid, center) beside the
+    * (num_sub_vectors, sub_dim) meta row. A directory in the older
+    * per-block MLlib-model layout has no `pq_codebooks`, so loading it
+    * throws and callers refit. */
   def savePq(spark: SparkSession, model: PqModel, path: String): Unit = {
     import spark.implicits._
     Seq((model.numSubVectors, model.subDim)).toDF("num_sub_vectors", "sub_dim")
       .write.mode("overwrite").parquet(s"$path/pq_meta")
-    model.models.zipWithIndex.foreach { case (km, b) =>
-      km.write.overwrite().save(s"$path/pq_block_$b")
-    }
+    model.codebooks.zipWithIndex.toSeq
+      .flatMap { case (cb, b) => cb.zipWithIndex.map { case (c, i) => (b, i, c.toSeq) } }
+      .toDF("block", "cid", "center")
+      .write.mode("overwrite").parquet(s"$path/pq_codebooks")
   }
 
   def loadPq(spark: SparkSession, path: String): PqModel = {
     val meta = spark.read.parquet(s"$path/pq_meta").head()
     val m = meta.getAs[Int]("num_sub_vectors")
-    val models = (0 until m).map(b => KMeansModel.load(s"$path/pq_block_$b")).toArray
-    PqModel(models, meta.getAs[Int]("sub_dim"))
+    val byBlock = spark.read.parquet(s"$path/pq_codebooks").collect()
+      .groupBy(_.getAs[Int]("block"))
+    require(byBlock.keySet == (0 until m).toSet,
+      s"pq_codebooks holds blocks ${byBlock.keySet.toSeq.sorted}, expected $m")
+    val codebooks = Array.tabulate(m)(b => byBlock(b).sortBy(_.getAs[Int]("cid"))
+      .map(_.getAs[scala.collection.Seq[Float]]("center").toArray))
+    PqModel(codebooks, meta.getAs[Int]("sub_dim"))
   }
 }

@@ -1,7 +1,5 @@
 package graft.index
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -12,9 +10,9 @@ import graft.functions.Distances
   * extension; the reference has no IVF, its ANN family is LSH/BQ/PQ).
   *
   * Two coarse-quantizer fits:
-  *  - `fit`: MLlib k-means on a bounded seeded sample
-  *    ([[Sampling.seededSample]] — the 100 TB-safe path; the single
-  *    training partition never holds more than `trainSample` rows);
+  *  - `fit`: in-process k-means ([[LocalKMeans]]) on a bounded seeded
+  *    sample ([[Sampling.collectSample]] — the 100 TB-safe path; the
+  *    driver never holds more than `trainSample` rows);
   *  - `fitSampledCentroids`: centroids are actual table rows picked by a
   *    multiplicative hash of the id — plain integer/float arithmetic that
   *    a SQL oracle can replay end-to-end (centroid selection, assignment,
@@ -23,9 +21,8 @@ import graft.functions.Distances
   *    a standard IVF variant (random-subset coarse quantizer).
   *
   * The model holds raw float centers; `assign` computes the
-  * nearest-centroid id with the codegen distance kernel + an
-  * `array_min` over (dist, idx) structs — no MLlib, no UDF on the scan
-  * path, whole-stage-codegen friendly. `cluster` is the partition key
+  * nearest-centroid id with the codegen argmin kernel — no UDF on the
+  * scan path, whole-stage-codegen friendly. `cluster` is the partition key
   * you'd bucket the table by at 100 TB, so a probe scans only
   * `nprobe/nlist` of the data.
   */
@@ -46,19 +43,19 @@ final case class IvfModel(centers: Array[Array[Float]]) {
 
 object Ivf {
 
-  /** k-means coarse centroids (seed 42) on a bounded deterministic sample;
-    * the sample (not the table) is coalesced to one partition so the fit
-    * is identical across sessions AND bounded at scale. */
+  /** k-means coarse centroids (greedy k-means++ seed 42, Lloyd's to
+    * `maxIter` or convergence — [[LocalKMeans]]) on a bounded
+    * deterministic sample collected in a partition-independent order, so
+    * the fit is identical across sessions AND bounded at scale. Jobs: a
+    * count and the sample collect, whatever `maxIter` is. */
   def fit(vectors: DataFrame, vecCol: String, nlist: Int = 16, seed: Long = 42,
       maxIter: Int = 20, trainSample: Int = 1 << 18): IvfModel = {
     val n = vectors.count()
-    val k = math.min(math.min(nlist.toLong, n), trainSample.toLong).toInt
-    val train = Sampling.seededSample(vectors, vecCol, n, trainSample, seed)
-      .select(array_to_vector(col(vecCol)).as("_ivf_f")).coalesce(1).cache()
-    val km = new KMeans().setK(k).setSeed(seed).setMaxIter(maxIter)
-      .setFeaturesCol("_ivf_f").setPredictionCol("_ivf_c").fit(train)
-    train.unpersist()
-    IvfModel(km.clusterCenters.map(_.toArray.map(_.toFloat)))
+    if (n == 0) return IvfModel(Array.empty)
+    val rows = Sampling.collectSample(vectors, vecCol, n, trainSample, seed)
+    val dim = rows.head.length
+    IvfModel(LocalKMeans.fit(LocalKMeans.pack(rows, 0, dim), dim,
+      math.min(nlist, rows.length), maxIter, seed))
   }
 
   /** Knuth multiplicative hash of the row id — 2654435761 = ⌊2³²/φ⌋.
@@ -259,8 +256,7 @@ object Ivf {
     // probed cell (IVFADC, §V): tables[b][c] = ‖rq_block_b − centroid_{b,c}‖²
     // — still |Q|·nprobe broadcast rows, never data
     val subDim = pq.subDim
-    val pqCentsLit = typedLit(
-      pq.models.map(_.clusterCenters.map(_.toArray.toSeq).toSeq).toSeq)
+    val pqCentsLit = typedLit(pq.codebooks.map(_.map(_.toSeq).toSeq).toSeq)
     val probesT = probes
       .withColumn("_rqv",
         zip_with(col("_qv"), element_at(centersLit(ivf), col("cluster") + lit(1)),

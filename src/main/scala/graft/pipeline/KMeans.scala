@@ -8,8 +8,8 @@ import graft.functions.NearestCentroidExpr
 /** Integer-exact Lloyd's k-means (Lloyd, IEEE TIT 1982) over an
   * embedding column — the clustering primitive diversity-aware corpus
   * pipelines build on (SemDeDup-style cluster-then-dedup, cluster-
-  * balanced sampling, coverage reports). Unlike the MLlib-backed IVF
-  * trainer (seeded, sample-based, oracle-opaque — `index/Ivf.scala`),
+  * balanced sampling, coverage reports). Unlike the in-process IVF/PQ
+  * trainer (seeded, sample-based, oracle-opaque — `index/LocalKMeans.scala`),
   * this variant is deterministic END-TO-END in micro-unit integer
   * arithmetic, so a SQL oracle replays every iteration exactly:
   *

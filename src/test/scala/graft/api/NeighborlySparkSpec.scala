@@ -141,6 +141,39 @@ class NeighborlySparkSpec extends SparkSpec {
     assert(pq.nonEmpty && pq.head.getAs[String]("id") === "v1")
   }
 
+  test("a snapshot in the older per-block KMeansModel PQ layout loads; PQ refits lazily") {
+    import sqlImplicits._
+    val d = db()
+    d.buildAllIndexes()
+    val path = s"${System.getProperty("java.io.tmpdir")}/graft_facade_old_pq"
+    d.save(path)
+    // rewrite the PQ artifact as older snapshots stored it: pq_meta plus
+    // one MLlib KMeansModel directory per block, no pq_codebooks
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$path/indexes/pq_codebooks"), true)
+    val feats = Seq(Array(0.0, 0, 0, 0), Array(1.0, 0, 0, 0), Array(0.0, 2, 0, 0))
+      .map(a => Tuple1(org.apache.spark.ml.linalg.Vectors.dense(a))).toDF("features")
+    new org.apache.spark.ml.clustering.KMeans().setK(2).setSeed(42).fit(feats)
+      .write.overwrite().save(s"$path/indexes/pq_block_0")
+    Seq((1, 4)).toDF("num_sub_vectors", "sub_dim")
+      .write.mode("overwrite").parquet(s"$path/indexes/pq_meta")
+    intercept[Exception](graft.index.IndexStore.loadPq(spark, s"$path/indexes"))
+
+    val d2 = new NeighborlySpark(spark, 4)
+    d2.load(path)
+    assert(d2.count === 3)
+    // the other artifacts still restore
+    val bq = d2.search(Array(0f, 0f, 0f, 0f), 2, SearchAlgorithm.BinaryQuantization, 10.0).collect()
+    assert(bq.nonEmpty && bq.head.getAs[String]("id") === "v1")
+    val pq = d2.search(Array(0f, 0f, 0f, 0f), 2, SearchAlgorithm.ProductQuantization, 10.0).collect()
+    assert(pq.nonEmpty && pq.head.getAs[String]("id") === "v1")
+    // the search refit the codebooks, so a re-save writes the current layout
+    val resaved = s"${System.getProperty("java.io.tmpdir")}/graft_facade_old_pq_resaved"
+    fs.delete(new org.apache.hadoop.fs.Path(resaved), true)
+    d2.save(resaved)
+    assert(graft.index.IndexStore.loadPq(spark, s"$resaved/indexes").numSubVectors === 1)
+  }
+
   test("built local indexes serve KDTree exactly and HNSW via the true graph; writes invalidate") {
     val d = db()
     val exactBefore = d.search(Array(0f, 0f, 0f, 0f), 3, SearchAlgorithm.KDTree, 100.0)

@@ -20,9 +20,9 @@ class ProductQuantizationSpec extends SparkSpec {
   test("fit produces 256-capped codebooks per block with the right shape") {
     assert(model.numSubVectors === 4)
     assert(model.subDim === 16)
-    model.models.foreach { m =>
-      assert(m.clusterCenters.length <= 256)
-      assert(m.clusterCenters.head.size === 16)
+    model.codebooks.foreach { cb =>
+      assert(cb.length <= 256)
+      assert(cb.head.length === 16)
     }
   }
 

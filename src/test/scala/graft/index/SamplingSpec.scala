@@ -33,10 +33,9 @@ class SamplingSpec extends SparkSpec {
       numSubVectors = Some(4), numCentroids = 16, trainSample = 300)
     val subsetOnly = ProductQuantization.fit(cappedSubset(300, 42), "embedding",
       numSubVectors = Some(4), numCentroids = 16, trainSample = 300)
-    assert(full.models.length === subsetOnly.models.length)
-    full.models.zip(subsetOnly.models).foreach { case (a, b) =>
-      assert(a.clusterCenters.map(_.toArray.toSeq).toSeq ===
-        b.clusterCenters.map(_.toArray.toSeq).toSeq)
+    assert(full.codebooks.length === subsetOnly.codebooks.length)
+    full.codebooks.zip(subsetOnly.codebooks).foreach { case (a, b) =>
+      assert(a.map(_.toSeq).toSeq === b.map(_.toSeq).toSeq)
     }
   }
 
